@@ -17,29 +17,19 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def _configure(spark: SparkSession) -> SparkSession:
-    """Apply engine session settings to a driver-provided session
-    (the driver builds its own SparkSession; the nanos conf must be
-    set before any parquet read). All of these are runtime-settable
-    confs: shuffle partitions sized to the box (a vanilla 200 would
-    pay 200-task stages on fixture-scale aggregates before AQE
-    coalesces), Arrow for the pandas-UDF and toPandas paths."""
-    import os
+    """Apply the engine's runtime confs
+    (:func:`feature_store_spark.session.runtime_confs`) to a
+    driver-provided session; the nanos conf must be set before any
+    parquet read.
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus),
-    )
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    # annotated MICROS, not INT96: INT96 has no footer min/max stats,
-    # which blinds parquet row-group skipping and the manifest
-    # data-skipping stats on written timestamp columns
-    spark.conf.set(
-        "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-    )
+    The static confs ``get_spark`` sets (driver memory, UI, and
+    ``spark.python.sql.dataFrameDebugging.enabled``) cannot be set
+    here: Spark fixes them when the driver builds its session, so a
+    driver session keeps its own values for them."""
+    from feature_store_spark.session import runtime_confs
+
+    for key, value in runtime_confs().items():
+        spark.conf.set(key, value)
     return spark
 
 

@@ -112,39 +112,42 @@ def assemble_vectors(
     defaults = defaults or {}
     feature_names = list(feature_names)
 
-    latest = latest_per_key(
-        scalars.filter(F.col(name_col).isin(feature_names)),
-        [entity_col, name_col],
-        time_col,
-        tiebreak_cols,
-    )
-    # ONE pivot of (value, time) structs — not two pivots + a join
-    # (which would shuffle the latest-scalars twice and re-join them)
-    # cast to double INSIDE the struct (review r10m): the sentinel
+    # ONE groupBy(entity) fills every slot: per feature, max_by picks
+    # the (value, time) of the row latest by (time, *tiebreaks). The
+    # ordering key is NULL on other features' rows, which max_by
+    # skips; struct ordering puts NULL fields first, so a NULL time or
+    # tiebreak loses like desc-nulls-last in latest_per_key. One
+    # shuffle: a window top-1 per (entity, feature) and then a pivot
+    # would take two.
+    # Cast to double INSIDE the struct (review r10m): the sentinel
     # invariant is "mask true <=> default served <=> age -1", and it
     # must key on the value AS SERVED — a NULL raw value (or one that
     # fails the double cast, e.g. a string 'n/a') serves the default,
     # so its t must not leak into the age and its mask must say
-    # default. assemble_flat already casts before the null check.
-    pivoted = (
-        latest.groupBy(entity_col)
-        .pivot(name_col, feature_names)
-        .agg(
-            F.first(
-                F.struct(
-                    F.col(value_col).cast("double").alias("v"),
-                    epoch_ms(F.col(time_col)).alias("t"),
-                )
-            )
-        )
+    # default. try_cast: under ANSI mode a plain cast would fail the
+    # whole lookup on one malformed scalar instead.
+    served = F.struct(
+        F.col(value_col).try_cast("double").alias("v"),
+        epoch_ms(F.col(time_col)).alias("t"),
     )
-
-    def slot(n: str):
-        # pivot emits columns NAMED the feature values: access by
-        # backtick-quoted name, or a feature like 'ctr.7d' parses as
-        # a struct path and an entity_col-named feature goes
-        # ambiguous (review r10m)
-        return F.col(f"`{n}`")
+    order = F.struct(F.col(time_col), *[F.col(c) for c in tiebreak_cols])
+    # positional slot names: a feature like 'ctr.7d' or one named
+    # entity_col never becomes a column name (review r10m)
+    slots = [F.col(f"__slot{i}") for i in range(len(feature_names))]
+    rows = scalars.filter(F.col(name_col).isin(feature_names))
+    # an empty schema filters every row out; agg() needs one expression
+    latest = (
+        rows.groupBy(entity_col).agg(
+            *[
+                F.max_by(served, F.when(F.col(name_col) == n, order)).alias(
+                    f"__slot{i}"
+                )
+                for i, n in enumerate(feature_names)
+            ]
+        )
+        if feature_names
+        else rows.select(entity_col)
+    )
 
     now_expr = (
         F.lit(now_ms)
@@ -153,23 +156,20 @@ def assemble_vectors(
     )
     values = F.array(
         *[
-            F.coalesce(
-                slot(n)["v"], F.lit(float(defaults.get(n, 0.0)))
-            )
-            for n in feature_names
+            F.coalesce(s["v"], F.lit(float(defaults.get(n, 0.0))))
+            for s, n in zip(slots, feature_names)
         ]
     )
-    mask = F.array(*[slot(n)["v"].isNull() for n in feature_names])
+    mask = F.array(*[s["v"].isNull() for s in slots])
     ages = F.array(
         *[
             F.when(
-                slot(n)["v"].isNull() | slot(n)["t"].isNull(),
-                F.lit(-1).cast("long"),
-            ).otherwise((now_expr - slot(n)["t"]).cast("long"))
-            for n in feature_names
+                s["v"].isNull() | s["t"].isNull(), F.lit(-1).cast("long")
+            ).otherwise((now_expr - s["t"]).cast("long"))
+            for s in slots
         ]
     )
-    return pivoted.select(
+    return latest.select(
         F.col(entity_col),
         values.alias("values"),
         mask.alias("is_default_mask"),

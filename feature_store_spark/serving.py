@@ -7,9 +7,13 @@ preserved is the *routing logic* and the vector contract (values +
 is_default_mask + value_ages_ms + source + staleness warnings). Here:
 
 - ``online_vectors`` / ``online_scalars`` are tables (FIXTURES.md §7),
-- a batch get is ONE query: requested ids (broadcast) left-joined to
-  vectors, then to assembled scalars, ``coalesce`` picking the source —
-  the Spark shape of the fallback chain,
+- a batch get is ONE query: requested ids left-joined to the cache,
+  the vectors and the assembled scalars, ``coalesce`` picking the
+  source — the Spark shape of the fallback chain. Physically, each tier
+  is one broadcast of the tier's rows (the build side of a left join
+  from the preserved ids, while the tier fits under the broadcast
+  threshold), and scalar assembly adds one shuffle: a single
+  ``groupBy(entity)`` fills every slot (``assemble_vectors``),
 - the ``source`` column reproduces ROCKSDB_VECTOR / SCALAR_ASSEMBLY /
   MISS routing (OnlineServingService.java:50,69,90,98); REDIS_CACHE is
   a cache tier with identical semantics to the vector hit.
@@ -40,8 +44,10 @@ def get_online_features(
 ) -> DataFrame:
     """Batch GetOnlineFeatures with the full fallback chain.
 
-    request_ids: a DataFrame with ``entity_col`` (kept in input order
-    via an explicit ``request_order`` column if present).
+    request_ids: a DataFrame with ``entity_col``. Every column it has
+    (for example a ``request_order`` column) is carried through to the
+    output unchanged; the output rows are in no particular order, so a
+    caller that needs input order sorts on such a column.
     Returns one row per requested id with values / mask / ages /
     source / stale_warning.
 
@@ -49,7 +55,7 @@ def get_online_features(
     materializer's last-writer-wins MERGE maintains (a KV store can't
     hold two values per key). Duplicate vector rows would fan out the
     left join to duplicate responses; the scalar side is immune
-    (assembly dedupes via latest_per_key).
+    (assembly keeps one latest row per entity and feature).
 
     ``cache`` + ``cache_ttl_ms`` add the REDIS_CACHE tier WITH its
     TTL semantics (RedisFeatureCache.java:45-120; the TTL knob is

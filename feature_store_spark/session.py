@@ -27,42 +27,46 @@ TABLES = (
 )
 
 
-def get_spark(
-    app_name: str = "feature_store_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
-    """Build (or reuse) a SparkSession with engine defaults.
+def runtime_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
+    """The engine's runtime-settable session confs, defined once.
+
+    ``get_spark`` sets them at build time and
+    ``__spark_entry__._configure`` sets them on a session the driver
+    provides, so the two sessions cannot drift apart. Shuffle
+    partitions default to ``$SPARK_SHUFFLE_PARTITIONS``, else
+    ``$SPARK_GRAFT_CPUS`` (32): sized to the box, because a vanilla
+    200 would pay 200-task stages on fixture-scale aggregates before
+    AQE coalesces them.
 
     AQE is left ON: at 100 TB it coalesces post-shuffle partitions,
     re-plans sort-merge joins into broadcast joins when runtime stats
     allow, and splits skewed shuffle partitions — all of which this
     engine relies on instead of hand-scheduling.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if master is None:
-        master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        shuffle_partitions = int(
+            os.environ.get(
+                "SPARK_SHUFFLE_PARTITIONS",
+                os.environ.get("SPARK_GRAFT_CPUS", "32"),
+            )
+        )
+    return {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
         # the driver's synthetic parquet uses TIMESTAMP(NANOS), which
-        # vanilla Spark rejects; read as long + convert in load_table
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # vanilla Spark rejects; read as long + convert in load_table.
+        # Must be set before any parquet read.
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
         # write timestamps as annotated MICROS, not legacy INT96:
         # INT96 carries NO footer min/max statistics, which would
         # blind both parquet row-group skipping and the manifest
         # data-skipping stats (sources/manifest.py) on every
         # timestamp column this engine writes
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
         # safe-cast Arrow conversion for createDataFrame(pandas_df)
         # (ADVICE r13): local_rows_df routes driver-built frames
         # through pandas+Arrow, and with the default (false) a
@@ -72,10 +76,42 @@ def get_spark(
         # Arrow lane and local_rows_df falls back to the verifying
         # classic path — a future caller bug stays a loud error, not
         # silent corruption.
-        .config("spark.sql.execution.pandas.convertToArrowArraySafely", "true")
-        .config("spark.ui.enabled", "false")
+        "spark.sql.execution.pandas.convertToArrowArraySafely": "true",
+    }
+
+
+def get_spark(
+    app_name: str = "feature_store_spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+) -> SparkSession:
+    """Build (or reuse) a SparkSession with engine defaults: the
+    :func:`runtime_confs` plus the static confs below, which only a
+    session's builder can set."""
+    if master is None:
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    static_confs = {
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        "spark.ui.enabled": "false",
+        # PySpark's DataFrame debugging wraps every Column and
+        # DataFrame call to walk the Python stack and record its
+        # file:line through extra py4j round trips (an active-session
+        # lookup, a PySparkCurrentOrigin set and clear), only so that
+        # Spark error messages can name the Python call site in their
+        # DataFrame context. With it off (and the one-shuffle scalar
+        # assembly), the serving layer of the ingest_churn benchmark
+        # made 1,562 py4j round trips per step instead of 5,380 (4
+        # vCPUs, seed 701). The trade: Spark errors no longer name
+        # the Python call site; the Python traceback, the error class
+        # and the message are unchanged.
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
+    }
+    return (
+        SparkSession.builder.appName(app_name)
+        .master(master)
+        .config(map={**runtime_confs(shuffle_partitions), **static_confs})
+        .getOrCreate()
     )
-    return builder.getOrCreate()
 
 
 def _nanos_timestamp_cols(path: str) -> list[str]:

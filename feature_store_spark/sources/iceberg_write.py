@@ -1249,21 +1249,32 @@ def iceberg_append(
                 for k in upsert_keys
             ]
         )
-    with _micros_timestamps(spark):
-        if del_keys is not None:
-            from concurrent.futures import ThreadPoolExecutor
+    try:
+        with _micros_timestamps(spark):
+            if del_keys is not None:
+                from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_data = pool.submit(writer.save, staging)
-                f_del = pool.submit(
-                    del_keys.distinct().write.parquet, del_dir
-                )
-                # surface BOTH results (a failed delete write must
-                # not be masked by a successful data write)
-                f_data.result()
-                f_del.result()
-        else:
-            writer.save(staging)
+                with ThreadPoolExecutor(max_workers=2) as pool:
+                    f_data = pool.submit(writer.save, staging)
+                    f_del = pool.submit(
+                        del_keys.distinct().write.parquet, del_dir
+                    )
+                    # surface BOTH results (a failed delete write must
+                    # not be masked by a successful data write)
+                    f_data.result()
+                    f_del.result()
+            else:
+                writer.save(staging)
+    except BaseException:
+        # nothing references either directory until the commit
+        # publishes, so a failed write leaves no orphan files behind;
+        # leaving the pool's `with` waited for the other write first
+        import shutil
+
+        for d in (staging, del_dir):
+            if d is not None:
+                shutil.rmtree(d, ignore_errors=True)
+        raise
 
     paths = [
         os.path.join(root, name)

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import shlex
 import sys
 import tempfile
 import time
@@ -38,26 +39,19 @@ def main():
 
     evdir = tempfile.mkdtemp(prefix="fss-evlog-")
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ["SPARK_GRAFT_CPUS"]
-    spark = (
-        SparkSession.builder.appName("fss-profile")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evdir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
-    )
+    # the event log is a static conf: it rides the launch arguments so
+    # the session itself (runtime and static confs) comes from get_spark
+    # exactly as the engine builds it
+    submit_args = os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    event_log = {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": evdir,
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    }
+    conf_args = [a for k, v in event_log.items() for a in ("--conf", f"{k}={v}")]
+    os.environ["PYSPARK_SUBMIT_ARGS"] = f"{shlex.join(conf_args)} {submit_args}"
+    spark = get_spark("fss-profile")
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm tables + python workers like bench.py does

@@ -1336,6 +1336,39 @@ def test_concurrent_metadata_commit_refuses(spark, tmp_path, monkeypatch):
     assert IcebergTable(spark, d).scan().count() == 2
 
 
+def test_failed_upsert_staging_leaves_no_orphans(spark, tmp_path, monkeypatch):
+    """The equality-delete write runs next to the data staging write;
+    when the data write raises after the delete write landed, neither
+    directory may stay behind and no snapshot is published. The fault
+    is injected into the data writer (the delete file is written
+    through ``DataFrameWriter.parquet``, the data through ``save``)."""
+    from pyspark.sql import DataFrameWriter
+    from pyspark.sql import functions as F
+
+    import feature_store_spark.sources.iceberg_write as iw
+
+    d = str(tmp_path / "iceorphan")
+    df = spark.createDataFrame(
+        [("user", "a", 1.0), ("user", "b", 2.0)],
+        "entity_type string, entity_id string, value_float double",
+    ).withColumn("event_time", F.timestamp_seconds(F.lit(100)))
+    iw.iceberg_append(df, d)
+    data_dir = os.path.join(d, "data")
+    before = set(os.listdir(data_dir))
+    snaps_before = IcebergTable(spark, d).snapshots()
+
+    def failing_save(self, *args, **kwargs):
+        raise RuntimeError("injected data-write failure")
+
+    monkeypatch.setattr(DataFrameWriter, "save", failing_save)
+    with pytest.raises(RuntimeError, match="injected"):
+        iw.iceberg_upsert(df, d, keys=["entity_id"])
+    monkeypatch.undo()
+    assert set(os.listdir(data_dir)) == before
+    assert IcebergTable(spark, d).snapshots() == snaps_before
+    assert IcebergTable(spark, d).scan().count() == 2
+
+
 def test_txn_marks_survive_expiration(spark, tmp_path):
     """Exactly-once must survive maintenance: expire_snapshots
     persists the (app-id, batch-id) high-water marks into the table

@@ -106,6 +106,20 @@ def test_assemble_vectors_defaults_mask_ages(spark):
     assert rows["e2"]["is_default_mask"] == [False, True, True]
 
 
+def test_assemble_vectors_empty_schema(spark):
+    """A view with no members assembles to no rows, with the usual
+    output columns."""
+    scalars = spark.createDataFrame(
+        [("e1", "f1", 1.5, ts("2024-01-01T00:00:00"))],
+        "entity_id string, feature_name string, value double, event_time timestamp",
+    )
+    out = assemble_vectors(scalars, [], now_ms=0)
+    assert out.columns == [
+        "entity_id", "values", "is_default_mask", "value_ages_ms"
+    ]
+    assert out.count() == 0
+
+
 def test_assemble_flat_grid(spark):
     scalars = spark.createDataFrame(
         [("e1", "f1", 1.0, ts("2024-01-01T00:00:00"))],

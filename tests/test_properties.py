@@ -1686,3 +1686,111 @@ def test_scoped_rewrite_content_invariant_property(
     assert keep_paths <= {
         f["path"] for f in t1.data_files(None, None)
     }
+
+
+_ASM_FEATURES = ["f", "ctr.7d", "entity_id", "absent"]
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[
+        HealthCheck.too_slow,
+        HealthCheck.function_scoped_fixture,
+    ],
+)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.sampled_from(["e0", "e1", "e2"]),
+            st.sampled_from(["f", "ctr.7d", "entity_id", "unrequested"]),
+            st.sampled_from([None, "n/a", "1.5", "-2", "7"]),
+            st.one_of(st.none(), st.integers(min_value=0, max_value=3)),
+            st.one_of(st.none(), st.integers(min_value=0, max_value=2)),
+        ),
+        min_size=0,
+        max_size=30,
+        # an exact (entity, feature, time, tiebreak) tie has no
+        # defined winner in either implementation
+        unique_by=lambda r: (r[0], r[1], r[3], r[4]),
+    )
+)
+@example(
+    # a time tie broken only by the tiebreak column, the loser's value
+    # valid and the winner's value failing the double cast
+    rows=[("e0", "f", "7", 1, 0), ("e0", "f", "n/a", 1, 2)]
+)
+@example(
+    # null event time and null tiebreak lose to any non-null one
+    rows=[
+        ("e1", "ctr.7d", "1.5", None, 2),
+        ("e1", "ctr.7d", "-2", 0, None),
+        ("e1", "entity_id", "7", 2, None),
+        ("e1", "entity_id", None, 2, 1),
+    ]
+)
+def test_assemble_vectors_matches_pandas_latest_property(spark, rows):
+    """assemble_vectors == a pandas model of "latest row per (entity,
+    feature) by event_time, then tiebreaks, descending, nulls last",
+    served as double with the feature's default when the latest value
+    is null or fails the cast. Covers features with no rows, feature
+    names with a dot or equal to the entity column, and rows of
+    unrequested features (ignored)."""
+    import datetime as _dt
+
+    import pandas as pd
+
+    from feature_store_spark.operators.reshape import assemble_vectors
+
+    base = _dt.datetime(2024, 1, 1, tzinfo=_dt.timezone.utc)
+    now_ms = 10**13
+    defaults = {"f": -1.0, "absent": 3.0}
+    df = spark.createDataFrame(
+        [
+            (e, n, v, None if t is None else base + _dt.timedelta(seconds=t), c)
+            for e, n, v, t, c in rows
+        ],
+        "entity_id string, feature_name string, value string, "
+        "event_time timestamp, c long",
+    )
+    got = {
+        r["entity_id"]: (
+            r["values"], r["is_default_mask"], r["value_ages_ms"]
+        )
+        for r in assemble_vectors(
+            df, _ASM_FEATURES, defaults=defaults, now_ms=now_ms,
+            tiebreak_cols=["c"],
+        ).collect()
+    }
+
+    def as_double(v):
+        try:
+            return float(v)
+        except (TypeError, ValueError):
+            return None
+
+    pdf = pd.DataFrame(
+        [r for r in rows if r[1] in _ASM_FEATURES],
+        columns=["e", "n", "v", "t", "c"],
+    ).astype({"t": "Float64", "c": "Float64"})
+    latest = (
+        pdf.sort_values(["t", "c"], ascending=False, na_position="last")
+        .groupby(["e", "n"])
+        .head(1)
+    )
+    want = {}
+    for e in sorted(set(latest["e"])):
+        picked = latest[latest["e"] == e].set_index("n")
+        vals, mask, ages = [], [], []
+        for n in _ASM_FEATURES:
+            v = as_double(picked.at[n, "v"]) if n in picked.index else None
+            t = picked.at[n, "t"] if n in picked.index else pd.NA
+            vals.append(defaults.get(n, 0.0) if v is None else v)
+            mask.append(v is None)
+            ages.append(
+                -1
+                if v is None or pd.isna(t)
+                else now_ms - (1704067200 + int(t)) * 1000
+            )
+        want[e] = (vals, mask, ages)
+    assert got == want
